@@ -719,7 +719,7 @@ def q_t7_mixture_sample(spark, sf_dir):
 
 def q_s5_frag_reassemble(spark, sf_dir):
     """S5 order-preserving reassembly, batch form of the streaming
-    fragment assembler (src/extraction/streaming.py; reference analog:
+    fragment assembler (src/extraction/streaming_staged.py; reference analog:
     the r1..rN -> explicit `order` sink discipline,
     /root/reference/src/detect_paragraphs.py output loop).
 
@@ -729,7 +729,7 @@ def q_s5_frag_reassemble(spark, sf_dir):
     chunk)))))`` and verify the round trip is exact. collect_list order
     is nondeterministic in a distributed shuffle — the array_sort on the
     (frag_id, chunk) struct is what restores it, the same contract the
-    stateful assembler implements across micro-batches. One shuffle on
+    streaming assembler implements across micro-batches. One shuffle on
     doc_id; no window, no global sort."""
     d = _t(spark, sf_dir, "documents")
     frags = d.select(
@@ -3339,15 +3339,19 @@ def q_text_chunk_windows(spark, sf_dir):
     dedup / index key). Reference analogue: the fragment split-reassemble
     order contract S5, /root/reference/src/HelperMethods.py:142-157.
 
-    Scale shape: ZERO shuffles — tokenize, explode window starts, and
-    derive per-chunk columns are all narrow maps, so the corpus
-    partitioning carries straight through and output cardinality is
+    Scale shape: the chunk derivation after the ``_par`` checkpoint has
+    ZERO shuffles — tokenize, explode window starts, and derive
+    per-chunk columns are all narrow maps, so the corpus partitioning
+    carries straight through and output cardinality is
     bounded by (1 + width/stride) x corpus tokens. The window-start
     array is a cheap int sequence (the expensive token array is
     let-bound per row and the slice is referenced exactly ONCE —
     the interpreted-Generate discipline, CLAUDE.md); head/tail come
     from element_at, never a second slice. A 10^12-doc run is pure
-    map-side: no key, no skew, no exchange to size.
+    map-side: no key, no skew, no exchange to size. The one exchange in
+    the lineage is ``_par``'s round-robin repartition ahead of the
+    ``localCheckpoint``, a test-harness artifact that spreads the
+    one-file test table over the task slots.
     """
     from extraction.textops import normalize_text, words
 

@@ -45,7 +45,7 @@ sys.path.insert(0, _SRC)  # extraction package
 os.environ["PYTHONPATH"] = _SRC + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 RUN_SCALING = os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0"
 # extraction corpus size for the throughput measurement (docs)
 N_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "120000"))

@@ -1,99 +1,35 @@
-"""Stateful streaming ingest: fragment assembly for interleaved corpora.
+"""Fragment contract for streaming ingest of interleaved corpora.
 
 At 10^12-doc scale documents do not arrive atomically: an interleaved
 text+media document is written as FRAGMENTS (crawler chunks, page
 ranges, media sidecars) that land across micro-batches, possibly more
-than once (at-least-once sources). The batch pipeline requires one
-complete ``(doc_id, spans)`` row per document; this module closes the
-gap with a custom stateful operator (``applyInPandasWithState``) that
-accumulates fragments per doc_id and emits each document exactly once —
-when its last fragment arrives — then hands the completed docs to the
-SAME vectorized kernel (``pipeline.extract``) as a stateless downstream
-map. After emission the key keeps a COMPLETION TOMBSTONE (state with a
-null payload): a duplicate fragment redelivered after the doc closed is
-swallowed instead of re-opening the doc and re-emitting it (the classic
-at-least-once double-emit; caught by a single-fragment doc whose only
-fragment is delivered twice across micro-batches). ``timeout_sec``
-bounds BOTH lifetimes: open docs whose tail never lands are evicted
-(dead-letter seam), and tombstones expire once the source's redelivery
-horizon has passed — so steady-state store size is in-flight docs plus
-one tiny tombstone per recently-completed doc, never corpus-sized. The hot path therefore stays Arrow-vectorized over whole
-micro-batches of completed docs; the per-key Python granularity of the
-state API touches only the cheap fragment concat, never the kernel.
+than once (at-least-once sources). Every fragment carries
+``(doc_id, frag_id ∈ [0, n_frags), n_frags, spans)`` (``FRAGMENTS_SCHEMA``).
+The ingest writer knows how many fragments it split a document into, so
+completion is a per-key local test (distinct frag_ids seen == n_frags) —
+no global coordination, no watermark needed for the happy path.
+Redeliveries are byte-identical to the first delivery, so a consumer may
+keep any one copy of a (doc_id, frag_id).
 
-Fragment contract (``FRAGMENTS_SCHEMA``): every fragment carries
-``(doc_id, frag_id ∈ [0, n_frags), n_frags, spans)``. The ingest writer
-knows how many fragments it split a document into, so completion is a
-per-key local test (``seen == n_frags``) — no global coordination, no
-watermark needed for the happy path. Duplicate delivery is idempotent
-both before completion (a ``frag_id`` already in state is ignored) and
-after it (tombstone, above).
+The assembler that turns this stream into exactly-once complete docs
+for the unchanged vectorized kernel is ``streaming_staged.py``.
 
-Scale/robustness notes:
-
-- State per open doc is the pickled ``{frag_id: span tuples}`` dict in a
-  single binary column. Pickle ties checkpoint state to the Python
-  minor version — acceptable for an in-flight buffer (drain the stream
-  before upgrading workers), and it keeps the state schema stable while
-  the span struct evolves.
-- ``timeout_sec`` arms a processing-time timeout per open doc: a doc
-  whose tail fragment never lands is evicted instead of leaking state
-  forever. Evicted docs are DROPPED from the output (production would
-  route them to a dead-letter sink; emitting a partial doc would make
-  output content timing-dependent, which the span-sequence-equality
-  contract forbids). Trigger caveat: with ProcessingTimeTimeout, Spark's
-  ``shouldRunAnotherBatch`` is permanently true, so even
-  ``Trigger.AvailableNow`` queries never self-terminate — they keep
-  scheduling no-data batches to fire timers. timeout_sec is for
-  continuously-running ingest; batch-drain runs should pass
-  ``timeout_sec=None`` (NoTimeout terminates normally) or stop() after
-  ``processAllAvailable()``.
-- The stateful shuffle partitions by doc_id — the same key the batch
-  path salts on. Individual fragments are small, but a doc's state
-  approaches its full span payload just before completion, and every
-  micro-batch that touches an open doc rewrites the whole accumulated
-  payload (state-store write amplification). At 10^12 docs the
-  buffer-in-state design here is right for docs that complete within a
-  few micro-batches; for long-lived stragglers TWO production variants
-  exist behind the same contract, differing in where the bookkeeping
-  lives: ``mark_fragments`` + ``start_counter_assembly`` below keeps
-  ``(n_frags, seen-bitmask, done)`` counters in state — bytes per doc —
-  lands fragments once in a staging table and drives the assembly join
-  from completion markers (tests/test_streaming_counters.py); sibling
-  ``streaming_staged.py`` goes fully state-store-free, replacing the
-  counters with a per-batch completion aggregate and the tombstone with
-  an emitted-doc ledger anti-join (tests/test_streaming_staged.py).
-  The operator contract (exactly-once complete docs, idempotent
-  duplicate handling, straggler dead-lettering) is identical across all
-  three; only the buffer/bookkeeping location changes.
-
-The reference has no streaming of any kind (it batch-processes a closed
-directory of images, /root/reference/src/detect_paragraphs.py); this is
-an engine extension per SURVEY.md §7.6.
+The reference has no streaming of any kind (its detect_paragraphs.py
+batch-processes a closed directory of images); this is an engine
+extension per SURVEY.md §7.6.
 """
 
 from __future__ import annotations
 
-import os
-import pickle
-
-import pandas as pd
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
-    BooleanType,
     IntegerType,
     StringType,
     StructField,
     StructType,
 )
 
-from .pipeline import extract
-from .schema import DOCS_SCHEMA, IN_SPAN
+from .schema import IN_SPAN
 
 FRAGMENTS_SCHEMA = StructType(
     [
@@ -103,261 +39,3 @@ FRAGMENTS_SCHEMA = StructType(
         StructField("spans", ArrayType(IN_SPAN, False), False),
     ]
 )
-
-# (n_frags, pickled {frag_id: ((kind, text, media_ref, offset), ...)})
-_STATE_SCHEMA = StructType(
-    [
-        StructField("n_frags", IntegerType(), True),
-        StructField("payload", BinaryType(), True),
-    ]
-)
-
-
-def _span_tuples(cell) -> tuple:
-    """Arrow→pandas gives one dict per struct span; freeze to tuples so
-    the state payload is compact and hashable-stable."""
-    return tuple(
-        (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in cell
-    )
-
-
-def assemble_fragments(frags: DataFrame, timeout_sec: float | None = None) -> DataFrame:
-    """Stateful fragment→document assembly. Returns a DOCS_SCHEMA stream
-    of COMPLETE documents, each emitted exactly once."""
-    timeout_ms = int(timeout_sec * 1000) if timeout_sec else 0
-
-    def fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            # open doc: tail never arrived -> evict (dead-letter seam);
-            # tombstone: redelivery horizon passed -> forget the doc_id
-            state.remove()
-            return
-        if state.exists:
-            n_frags, payload = state.get
-            if payload is None:
-                # completion tombstone: doc already emitted — swallow
-                # redelivered fragments, keep the tombstone armed
-                for _ in pdfs:
-                    pass
-                if timeout_ms:
-                    state.setTimeoutDuration(timeout_ms)
-                return
-            got = pickle.loads(payload)
-        else:
-            n_frags, got = -1, {}
-        for pdf in pdfs:
-            # a handful of fragment rows per doc per micro-batch —
-            # itertuples here is bookkeeping, the span payloads stay
-            # untouched until emission
-            for row in pdf.itertuples(index=False):
-                n_frags = int(row.n_frags)
-                fid = int(row.frag_id)
-                if fid not in got:  # at-least-once dedup
-                    got[fid] = _span_tuples(row.spans)
-        if len(got) == n_frags:
-            spans = [
-                {"kind": k, "text": t, "media_ref": m, "offset": o}
-                for fid in sorted(got)
-                for (k, t, m, o) in got[fid]
-            ]
-            # leave a tombstone (null payload), not remove(): a duplicate
-            # arriving after completion must not re-open + re-emit
-            state.update((n_frags, None))
-            if timeout_ms:
-                state.setTimeoutDuration(timeout_ms)
-            yield pd.DataFrame({"doc_id": [key[0]], "spans": [spans]})
-        else:
-            state.update(
-                (n_frags, pickle.dumps(got, protocol=pickle.HIGHEST_PROTOCOL))
-            )
-            if timeout_ms:
-                state.setTimeoutDuration(timeout_ms)
-
-    return frags.groupBy("doc_id").applyInPandasWithState(
-        fn,
-        outputStructType=DOCS_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_sec
-        else GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Production variant A: counters-in-state + staging table + assembly join.
-#
-# Same operator contract as assemble_fragments (exactly-once complete
-# docs, idempotent duplicate handling before AND after completion,
-# timeout eviction of stragglers) — only the buffer location changes:
-# the state store holds (n_frags, seen-bitmask, done) = BYTES per doc,
-# fragments land once in a parquet staging table, and completed docs are
-# assembled by a JVM-side join per micro-batch. This closes the
-# write-amplification caveat documented above: a micro-batch touching an
-# open doc rewrites a bitmask, never the accumulated span payload.
-#
-# Variant B (streaming_staged.py) removes the state store entirely —
-# ledger anti-join instead of the done flag, per-batch completion
-# aggregate instead of counters. A keeps O(1) state lookups and
-# state-timeout dead-lettering; B trades those for zero state at the
-# cost of re-aggregating completion from staging each batch (pruned by
-# the batch's doc_ids). Both are the named alternatives in B's own
-# scale notes; at 10^12 docs A is the default, B fits engines whose
-# state store is the operational bottleneck.
-# ---------------------------------------------------------------------------
-
-# stateful pass-through output: first-delivery fragments (is_marker=false)
-# plus one completion marker per doc (is_marker=true, frag_id=-1, spans=[])
-_STAGED_SCHEMA = StructType(
-    FRAGMENTS_SCHEMA.fields + [StructField("is_marker", BooleanType(), False)]
-)
-
-# (n_frags, little-endian seen-bitmask, done) — bytes per doc, not the doc
-_COUNTER_STATE_SCHEMA = StructType(
-    [
-        StructField("n_frags", IntegerType(), True),
-        StructField("seen_mask", BinaryType(), True),
-        StructField("done", BooleanType(), True),
-    ]
-)
-
-
-def mark_fragments(frags: DataFrame, timeout_sec: float | None = None) -> DataFrame:
-    """Counter-state dedup + completion detection, payloads pass through.
-
-    Emits every FIRST delivery of a fragment unchanged (redeliveries are
-    dropped against the seen-bitmask — before or after completion), plus
-    exactly one marker row per doc the micro-batch completes. State per
-    key is (n_frags:int, bitmask:ceil(n/8) bytes, done:bool); after
-    completion the entry doubles as the tombstone until timeout_sec
-    expires it, exactly like the buffer variant's null-payload tombstone.
-    """
-    timeout_ms = int(timeout_sec * 1000) if timeout_sec else 0
-
-    def fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            # open doc: evict counters (its staged fragments become the
-            # dead-letter population a compaction pass reclaims);
-            # done doc: redelivery horizon passed — forget the doc_id
-            state.remove()
-            return
-        if state.exists:
-            n_frags, mask_b, done = state.get
-            mask = int.from_bytes(mask_b, "little")
-        else:
-            n_frags, mask, done = -1, 0, False
-        fresh = []
-        for pdf in pdfs:
-            for row in pdf.itertuples(index=False):
-                n_frags = int(row.n_frags)
-                fid = int(row.frag_id)
-                if not done and not (mask >> fid) & 1:
-                    mask |= 1 << fid
-                    fresh.append((key[0], fid, n_frags, row.spans, False))
-        if not done and n_frags > 0 and mask.bit_count() == n_frags:
-            done = True
-            fresh.append((key[0], -1, n_frags, [], True))
-        state.update(
-            (n_frags, mask.to_bytes((max(n_frags, 1) + 7) // 8, "little"), done)
-        )
-        if timeout_ms:
-            state.setTimeoutDuration(timeout_ms)
-        if fresh:
-            yield pd.DataFrame(
-                fresh,
-                columns=["doc_id", "frag_id", "n_frags", "spans", "is_marker"],
-            )
-
-    return frags.groupBy("doc_id").applyInPandasWithState(
-        fn,
-        outputStructType=_STAGED_SCHEMA,
-        stateStructType=_COUNTER_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_sec
-        else GroupStateTimeout.NoTimeout,
-    )
-
-
-def start_counter_assembly(
-    frags: DataFrame,
-    staging_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    timeout_sec: float | None = None,
-):
-    """Start the staged-assembly stream; returns the StreamingQuery.
-
-    Per micro-batch (foreachBatch, ORDER within the batch is the
-    correctness argument):
-
-    1. First-delivery fragments append to the staging table as
-       ``staging_dir/epoch_<id>`` written with mode=overwrite — a
-       replayed epoch after a crash rewrites the same directory, so
-       staging holds each fragment exactly once.
-    2. Marker doc_ids (tiny) broadcast-semi-join the FULL staging table
-       (this epoch's directory included — written in step 1), fragments
-       group per doc, ``array_sort`` on (frag_id) restores document
-       order JVM-side, and the assembled docs run through the unchanged
-       vectorized kernel into ``output_dir/epoch_<id>`` — also
-       overwrite, so emission stays exactly-once across replays.
-
-    The state store never holds a span payload; staging compaction
-    (drop fragments of docs emitted before the oldest retained epoch,
-    plus timeout-evicted orphans) is an offline maintenance job outside
-    this operator, as in any log-structured ingest design.
-    """
-
-    def commit_batch(batch_df, epoch_id: int):
-        spark = batch_df.sparkSession
-        batch_df.persist()
-        try:
-            batch_df.filter(~F.col("is_marker")).drop("is_marker").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(staging_dir, f"epoch_{epoch_id}"))
-            done_ids = batch_df.filter(F.col("is_marker")).select("doc_id")
-            if done_ids.isEmpty():
-                return
-            staged = spark.read.schema(FRAGMENTS_SCHEMA).parquet(
-                os.path.join(staging_dir, "epoch_*")
-            )
-            assembled = (
-                staged.join(F.broadcast(done_ids), "doc_id", "left_semi")
-                .groupBy("doc_id")
-                .agg(
-                    F.array_sort(
-                        F.collect_list(F.struct("frag_id", "spans"))
-                    ).alias("fs")
-                )
-                .select(
-                    "doc_id",
-                    F.flatten(
-                        F.expr("transform(fs, x -> x.spans)")
-                    ).alias("spans"),
-                )
-            )
-            extract(assembled).write.mode("overwrite").parquet(
-                os.path.join(output_dir, f"epoch_{epoch_id}")
-            )
-        finally:
-            batch_df.unpersist()
-
-    return (
-        mark_fragments(frags, timeout_sec=timeout_sec)
-        .writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def assemble_extract(frags: DataFrame, timeout_sec: float | None = None) -> DataFrame:
-    """Fragment stream → assembled docs → vectorized extraction kernel.
-
-    The kernel stage is the unchanged batch ``pipeline.extract``
-    (mapInArrow) appended AFTER the stateful operator — stateless
-    transforms downstream of a stateful op are allowed in append mode,
-    and this is what keeps extraction vectorized over whole micro-batches
-    of completed docs instead of per-key pandas calls."""
-    return extract(assemble_fragments(frags, timeout_sec=timeout_sec))

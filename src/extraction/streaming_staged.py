@@ -1,13 +1,9 @@
-"""Staged fragment assembly — the PRODUCTION variant of streaming.py's
-buffer-in-state assembler (the design its own docstring sketches at
-streaming.py: counters + staging table + assembly join).
+"""Staged fragment assembly: the engine's one fragment assembler.
 
-Why a second implementation of the same contract: the state-store
-variant buffers each open document's accumulated span payload IN the
-state store, so every micro-batch that touches an open doc rewrites the
-whole payload (write amplification ~ O(doc size × batches-to-complete)),
-and a long-lived straggler pins its full payload in the store. Here the
-state store holds NOTHING:
+Turns a ``streaming.FRAGMENTS_SCHEMA`` stream into exactly-once complete
+documents for the unchanged vectorized kernel. The state store holds
+NOTHING: a micro-batch that touches an open doc never rewrites its
+accumulated spans, and a long-lived straggler pins no state.
 
 - every fragment lands exactly once in a STAGING table
   (``staging/batch=<id>/``, idempotently overwritten per micro-batch, so
@@ -28,24 +24,23 @@ Duplicate deliveries dedup at READ time (``first`` over identical
 payloads grouped by (doc_id, frag_id) — the fragment contract says
 redeliveries are byte-identical), both before and after completion (a
 post-completion redelivery makes the doc complete again, and the ledger
-anti-join swallows it) — the same at-least-once guarantees as the
-tombstone design, without tombstone state.
+anti-join swallows it) — an at-least-once guarantee without tombstone
+state.
 
 Scale notes (the honest ledger): the per-batch completion check reads
 the staging table pruned by the batch's doc_id set. On plain parquet
 that is a footer-scan of all staging files; production staging is an
 Iceberg table bucketed by hash(doc_id) so the semi-join prunes to the
 touched buckets, and the ledger is likewise a bucketed table (or the
-completion counters move back into the state store as bytes-sized
+completion counters move into the state store as bytes-sized
 (seen, n_frags) pairs — either works; the point is the PAYLOAD never
-lives in the state store; that counters alternative is implemented as
-``streaming.mark_fragments`` + ``streaming.start_counter_assembly``). Stragglers that never complete simply age in
+lives in the state store). Stragglers that never complete simply age in
 staging — dead-lettering is a partition-age maintenance job instead of
 a state timeout.
 
-The reference has no streaming of any kind (batch over a closed image
-directory, /root/reference/src/detect_paragraphs.py); engine extension
-per SURVEY.md §7.6, same contract tests as streaming.assemble_extract.
+The reference has no streaming of any kind (its detect_paragraphs.py
+batch-processes a closed image directory); engine extension per
+SURVEY.md §7.6. Contract tests: tests/test_streaming_staged.py.
 """
 
 from __future__ import annotations
@@ -54,16 +49,20 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .pipeline import extract
+from .streaming import FRAGMENTS_SCHEMA
 
 
-def _read_or_empty(spark: SparkSession, path: str, schema_ddl: str) -> DataFrame:
+def _read_or_empty(
+    spark: SparkSession, path: str, schema: StructType | str
+) -> DataFrame:
     """Read a partitioned dir that may not exist yet (first batch)."""
     try:
         return spark.read.option("basePath", path).parquet(path)
     except Exception:
-        return spark.createDataFrame([], schema_ddl)
+        return spark.createDataFrame([], schema)
 
 
 def assemble_completed(staged: DataFrame, cand_ids: DataFrame) -> DataFrame:
@@ -116,13 +115,7 @@ def start_staged_assembly(frags: DataFrame, work_dir: str, run_extract: bool = T
             .select("doc_id")
             .distinct()
         )
-        staged = _read_or_empty(
-            spark,
-            staging,
-            "doc_id string, frag_id int, n_frags int, "
-            "spans array<struct<kind:string,text:string,"
-            "media_ref:string,offset:int>>, batch bigint",
-        ).drop("batch")
+        staged = _read_or_empty(spark, staging, FRAGMENTS_SCHEMA).drop("batch")
         completed = assemble_completed(staged, cand)
         # 3. exactly-once emission: anti-join against PRIOR batches'
         # ledger only — the current batch's own partition is excluded so

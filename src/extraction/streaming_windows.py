@@ -1,7 +1,7 @@
 """Watermarked event-time operators: the late-data surface of the engine.
 
 Two operators close the one Structured-Streaming idiom the repo's
-stateful assemblers (streaming.py / streaming_staged.py) do not cover —
+fragment assembler (streaming_staged.py) does not cover —
 EVENT-time aggregation under a watermark, where rows may arrive out of
 order and a bounded lateness horizon decides when a window is final:
 
@@ -35,7 +35,7 @@ order and a bounded lateness horizon decides when a window is final:
 Scale notes. Both operators shuffle once on their group key
 (user_id+session / window+kind) with map-side partial aggregation;
 state per key is one running aggregate row, never a payload buffer
-(contrast the assembler's buffer-in-state caveat, streaming.py). The
+(the fragment assembler, streaming_staged.py, keeps no state at all). The
 session merge is Spark's native state-store session list — state is
 bounded by OPEN sessions only, because the watermark finalizes and
 evicts closed ones. Window state is bounded by (horizon / window)

@@ -1,9 +1,8 @@
-"""Parity contract tests for the STAGED assembler (streaming_staged.py)
-— the production variant of streaming.py's buffer-in-state design.
-Same contract, same fixtures as test_streaming_assembly.py: duplicate
-deliveries, fragments straddling micro-batches, a held-back tail
-fragment across a stop/restart, exactly-once emission, span-sequence
-equality with the batch kernel.
+"""Contract tests for the fragment assembler (streaming_staged.py):
+duplicate deliveries, fragments straddling micro-batches, a held-back
+tail fragment across a stop/restart, exactly-once emission (also after
+completion and across a crash replay), span-sequence equality with the
+batch kernel.
 """
 
 from __future__ import annotations
@@ -16,7 +15,24 @@ from extraction.oracle import extract_doc
 from extraction.streaming import FRAGMENTS_SCHEMA
 from extraction.streaming_staged import start_staged_assembly
 
-from tests.test_streaming_assembly import N_DOCS, _fragments
+N_DOCS = 60  # covers all corpus families (i % 100 < 60): text, media, mixed
+
+
+def _fragments():
+    """Deterministic fragmentation: doc i splits into 1 + i%4 contiguous
+    chunks; fragment (i, f) is assigned to file (i + 2*f) % 5 so the
+    fragments of every multi-fragment doc straddle micro-batches."""
+    files = [[] for _ in range(5)]
+    for i in range(N_DOCS):
+        doc_id, spans = gen_doc(i)
+        n_frags = 1 + i % 4
+        cuts = [round(len(spans) * f / n_frags) for f in range(n_frags + 1)]
+        for f in range(n_frags):
+            row = (doc_id, f, n_frags, spans[cuts[f] : cuts[f + 1]])
+            files[(i + 2 * f) % 5].append(row)
+            if (i + f) % 7 == 0:  # at-least-once: duplicate delivery
+                files[(i + 2 * f + 3) % 5].append(row)
+    return files
 
 
 def _run(spark, src, work):
@@ -70,8 +86,7 @@ def test_staged_assembly_matches_batch_kernel(spark, tmp_path):
 
     # the write-amplification claim, checked: every fragment row lands in
     # staging exactly once per DELIVERY (no per-batch payload rewrite of
-    # open docs — the state-store variant rewrites an open doc's whole
-    # payload every touched batch)
+    # open docs)
     staged = spark.read.option(
         "basePath", os.path.join(work, "staging")
     ).parquet(os.path.join(work, "staging"))
@@ -101,11 +116,8 @@ def test_staged_batch_replay_is_idempotent(spark, tmp_path):
     """Crash-replay seam: re-running an already-committed batch's
     foreachBatch body (out written, ledger written, checkpoint lost)
     must overwrite to the identical result — no duplicate emission, no
-    loss. Simulated by invoking the batch processor directly twice."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from extraction.streaming_staged import _read_or_empty, assemble_completed
-
+    loss. Simulated by deleting the checkpoint and re-running the same
+    source files."""
     src = str(tmp_path / "frags")
     work = str(tmp_path / "work")
     doc_id, spans = gen_doc(7)
@@ -129,7 +141,7 @@ def test_staged_batch_replay_is_idempotent(spark, tmp_path):
 
 def test_staged_post_completion_redelivery_swallowed(spark, tmp_path):
     """A fragment redelivered AFTER its doc completed and emitted must
-    not re-emit the doc (the ledger anti-join is the tombstone here)."""
+    not re-emit the doc (the ledger anti-join swallows it)."""
     src = str(tmp_path / "frags")
     work = str(tmp_path / "work")
     doc_id, spans = gen_doc(11)
